@@ -1,8 +1,8 @@
 package graft.cli
 
 import graft.align.Distance
-import graft.correct.{CompiledModel, Corrector}
-import graft.pipeline.CorrectionJob
+import graft.correct.CompiledModel
+import graft.pipeline.{CorrectionJob, Metrics}
 import graft.sources.{ModelIO, PageXml, Sources}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -213,6 +213,10 @@ object Process {
           rejectionWeight = a.get("rejection-weight").map(_.toDouble)
             .getOrElse(base.rejectionWeight))
       val bc = CorrectionJob.broadcastModel(spark, model)
+      val metrics = Metrics(spark)
+      def report(what: String, dest: String): Unit =
+        println(s"corrected ${metrics.textSpans.value} $what" +
+          s" (${metrics.spansChanged.value} changed) -> $dest")
       if (a.contains("page-xml-dir")) {
         // PAGE-XML workspace mode (the OCR-D wrapper's dataflow,
         // wrapper/decode.py): correct every TextLine of every page
@@ -221,40 +225,32 @@ object Process {
         val outDir = a.getOrElse("page-xml-out", srcDir + "-corrected")
         val lines = PageXml.loadPageXmlDir(spark, srcDir)
           .as[(String, String, String)]
-        // persist: the corrections feed BOTH the write-back join and
-        // the count — without it each consumer re-parses and
-        // re-corrects every page file
-        val corrected = lines.mapPartitions { it =>
-          val m = bc.value
-          val cache = graft.correct.SharedWindowCache.forModel(m)
-          it.map { case (file, id, text) =>
-            (file, id, Corrector.correctLine(text, m, cache))
-          }
-        }.toDF("file", "line_id", "text").persist()
-        try {
-          PageXml.savePageXmlDir(spark, srcDir, outDir, corrected)
-          println(s"corrected ${corrected.count()} page lines -> $outDir")
-        } finally corrected.unpersist(false)
+        val corrected = CorrectionJob.mapCorrected(lines, bc, Some(metrics)) {
+          case ((file, id, text), correct) => (file, id, correct(text))
+        }.toDF("file", "line_id", "text")
+        PageXml.savePageXmlDir(spark, srcDir, outDir, corrected)
+        report("page lines", outDir)
       } else {
         val in = (a.get("input-file") match {
           case Some(f) => Sources.loadPairsFromFile(spark, f)
           case None => Sources.loadPairsFromDir(spark, a("directory"),
             a("input-suffix")) // process.py:168-169
         }).as[(String, String)]
-        val out = in.mapPartitions { it =>
-          val m = bc.value
-          val cache = graft.correct.SharedWindowCache.forModel(m)
-          it.map { case (id, line) =>
-            (id, Corrector.correctLine(line, m, cache))
-          }
+        val out = CorrectionJob.mapCorrected(in, bc, Some(metrics)) {
+          case ((id, line), correct) => (id, correct(line))
         }.toDF("line_id", "text")
         a.get("output-file") match {
           case Some(f) =>
-            CliArgs.writeSingleTsv(out.orderBy($"line_id"), f)
-            println(s"corrected ${in.count()} lines -> $f")
+            // persisted so the sort's range-sampling pass fills the
+            // cache instead of re-running the correction (as in
+            // Queries.qCorrectDocs)
+            out.persist()
+            try CliArgs.writeSingleTsv(out.orderBy($"line_id"), f)
+            finally out.unpersist(false)
+            report("lines", f)
           case None => // process.py:178-181: one file per line id
             Sources.savePairsToDir(out, a("directory"), a("output-suffix"))
-            println(s"corrected ${in.count()} lines -> ${a("directory")}/*.${a("output-suffix")}")
+            report("lines", s"${a("directory")}/*.${a("output-suffix")}")
         }
       }
     } finally if (owned) spark.stop()

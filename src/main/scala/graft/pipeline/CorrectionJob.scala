@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import graft.correct.{CompiledModel, Corrector}
+import graft.correct.{AltCache, CompiledModel, Corrector, SharedWindowCache}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -32,33 +32,62 @@ object Metrics {
   * reference's COW fork pool (scripts/process.py:14,55-70). The inference
   * path has NO shuffle except the optional salting exchange.
   *
+  * Every caller that corrects text (the Doc job, the CLI, the battery
+  * queries) goes through `mapCorrected`, so the executor side — one
+  * broadcast read per partition, the executor's shared window cache, the
+  * span counters — exists once.
+  *
   * Scale design (100 TB / 1000 executors):
   *  - model is broadcast once per executor (torrent broadcast), NOT
   *    serialized per task;
   *  - docs are value-independent rows → embarrassingly parallel map;
-  *  - long-document skew is broken either by uniform re-hashing on
-  *    doc_id (`salt`) or by span-chunk splitting (`chunkSpans`), which
-  *    caps per-row work at `chunkSize` spans and reassembles with one
-  *    groupBy — use when doc length skew is extreme (SURVEY.md §7.4 #5).
+  *  - long-document skew is broken by uniform re-hashing on doc_id
+  *    (`saltPartitions`).
   */
 object CorrectionJob {
 
   def broadcastModel(spark: SparkSession, model: CompiledModel): Broadcast[CompiledModel] =
     spark.sparkContext.broadcast(model)
 
-  private def correctSpan(s: Span, m: CompiledModel, metrics: Option[Metrics],
-      cache: graft.correct.AltCache = null): Span =
-    if (s.kind == "text") {
-      metrics.foreach { mx =>
-        mx.textSpans.add(1); mx.chars.add(s.text.length.toLong)
-      }
-      val corrected = Corrector.correctLine(s.text, m, cache)
-      if (corrected != s.text) metrics.foreach(_.spansChanged.add(1))
-      Span(s.kind, corrected, s.media_ref, s.offset)
-    } else {
-      metrics.foreach(_.mediaSpans.add(1))
-      s
+  /** Per-partition set-up shared by every correction map: the model is
+    * read from the broadcast once per partition, and the window cache is
+    * the executor-wide memo for that model (none when `useCache` is
+    * false — the bench's controlled miss-path measurement, the
+    * 10^12-doc regime where window diversity dwarfs any cache). */
+  private def mapWithModel[T, U: Encoder](ds: Dataset[T],
+      bc: Broadcast[CompiledModel], useCache: Boolean)(
+      f: (CompiledModel, AltCache) => T => U): Dataset[U] =
+    ds.mapPartitions { it =>
+      val m = bc.value
+      val cache = if (useCache) SharedWindowCache.forModel(m) else null
+      it.map(f(m, cache))
     }
+
+  /** The executor-side correction step: `f` receives each row and a line
+    * corrector that counts text spans, chars and changed spans into
+    * `metrics`. A null line passes through unchanged (a text span with
+    * 0 chars) instead of failing the job. */
+  def mapCorrected[T, U: Encoder](ds: Dataset[T], bc: Broadcast[CompiledModel],
+      metrics: Option[Metrics] = None, useCache: Boolean = true)(
+      f: (T, String => String) => U): Dataset[U] =
+    mapWithModel(ds, bc, useCache) { (m, cache) =>
+      val correct: String => String = { line =>
+        metrics.foreach(_.textSpans.add(1))
+        if (line == null) line
+        else {
+          metrics.foreach(_.chars.add(line.length.toLong))
+          val corrected = Corrector.correctLine(line, m, cache)
+          if (corrected != line) metrics.foreach(_.spansChanged.add(1))
+          corrected
+        }
+      }
+      row => f(row, correct)
+    }
+
+  /** Uniform doc spread: re-hash on doc_id into `saltPartitions`. */
+  private def salted(docs: Dataset[Doc],
+      saltPartitions: Option[Int]): Dataset[Doc] =
+    saltPartitions.fold(docs)(p => docs.repartition(p, xxhash64(col("doc_id"))))
 
   /** Default path: optional salted repartition (uniform doc spread),
     * then a pure map over docs. */
@@ -68,20 +97,13 @@ object CorrectionJob {
       useCache: Boolean = true): Dataset[Doc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val input = saltPartitions match {
-      case Some(p) => docs.repartition(p, xxhash64($"doc_id"))
-      case None    => docs
-    }
-    input.mapPartitions { it =>
-      val m = bc.value
-      // useCache=false is the bench's controlled miss-path measurement
-      // (the 10^12-doc regime where window diversity dwarfs any cache)
-      val cache =
-        if (useCache) graft.correct.SharedWindowCache.forModel(m) else null
-      it.map { d =>
+    mapCorrected(salted(docs, saltPartitions), bc, metrics, useCache) {
+      (d, correct) =>
         metrics.foreach(_.docs.add(1))
-        Doc(d.doc_id, d.spans.map(correctSpan(_, m, metrics, cache)))
-      }
+        Doc(d.doc_id, d.spans.map { s =>
+          if (s.kind == "text") s.copy(text = correct(s.text))
+          else { metrics.foreach(_.mediaSpans.add(1)); s }
+        })
     }
   }
 
@@ -96,49 +118,13 @@ object CorrectionJob {
       saltPartitions: Option[Int] = None): Dataset[Doc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val input = saltPartitions match {
-      case Some(p) => docs.repartition(p, xxhash64($"doc_id"))
-      case None    => docs
-    }
-    input.mapPartitions { it =>
-      val m = bc.value
-      val lm = bcLm.value
-      val cache = graft.correct.SharedWindowCache.forModel(m)
-      it.map { d =>
-        metrics.foreach(_.docs.add(1))
-        graft.correct.LmDecoder.correctDocLm(d, m, lm, lmWeight, beamWidth, cache)
-      }
-    }
-  }
-
-  /** Skew-splitting path: docs with more than `chunkSize` spans are
-    * split into chunks, corrected in parallel, and reassembled by
-    * doc_id with span order restored via offset sort. Costs one extra
-    * shuffle — only pays off under extreme doc-length skew. */
-  def correctDocsChunked(docs: Dataset[Doc], bc: Broadcast[CompiledModel],
-      chunkSize: Int = 64,
-      metrics: Option[Metrics] = None): Dataset[Doc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val chunks = docs.flatMap { d =>
-      d.spans.grouped(chunkSize).zipWithIndex.map { case (g, ci) =>
-        (d.doc_id, ci, g)
-      }
-    }
-    // spread chunks uniformly (a mega-doc's chunks land on many tasks)
-    val corrected = chunks
-      .repartition(col("_1"), col("_2"))
-      .mapPartitions { it =>
-        val m = bc.value
-        val cache = graft.correct.SharedWindowCache.forModel(m)
-        it.map { case (id, ci, g) =>
-          (id, ci, g.map(correctSpan(_, m, metrics, cache)))
+    mapWithModel(salted(docs, saltPartitions), bc, useCache = true) {
+      (m, cache) =>
+        val lm = bcLm.value
+        d => {
+          metrics.foreach(_.docs.add(1))
+          graft.correct.LmDecoder.correctDocLm(d, m, lm, lmWeight, beamWidth, cache)
         }
-      }
-    corrected.groupByKey(_._1).mapGroups { (id, it) =>
-      metrics.foreach(_.docs.add(1))
-      val spans = it.toSeq.sortBy(_._2).flatMap(_._3)
-      Doc(id, spans)
     }
   }
 }

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.align.Distance
-import graft.correct.{CompiledModel, Corrector}
-import graft.pipeline.DocGen
+import graft.correct.CompiledModel
+import graft.pipeline.{CorrectionJob, DocGen}
 import graft.tokenize.Tokenizer
 import graft.train.{Category, ErrorModelTrainer, LexiconBuilder, NaiveBayes}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -102,7 +102,7 @@ object Queries {
   }
 
   /** Caches persisted by query builders (qNgramJaccard's per-shingle
-    * aggregate). Each builder registers its persisted DF here;
+    * aggregate, qCorrectDocs' corrections). Each builder registers its persisted DF here;
     * harnesses (Bench, Verify, specs) call `releaseCaches()` after
     * materializing a query's result — otherwise repeated runs in one
     * session accumulate cached relations whose spilled disk blocks are
@@ -507,23 +507,19 @@ object Queries {
     * adjusted CER + precision/recall — alignment-based, rows-only). */
   def qEvalMetrics(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val model = modelFor(s, dir)
-    val bc = s.sparkContext.broadcast(model)
-    pairsDf(s, dir).select($"ocr", $"gt").as[(String, String)]
-      .mapPartitions { it =>
-        val m = bc.value
-        val cache = graft.correct.SharedWindowCache.forModel(m)
-        it.map { case (ocr, gt) =>
-          val cor = Corrector.correctLine(ocr, m, cache)
-          val (dOcr, lOcr) = Distance.adjustedDistance(ocr, gt)
-          val (dCor, lCor) = Distance.adjustedDistance(cor, gt)
-          val (tp, tn, fp, fn) = Distance.precisionRecall(ocr, cor, gt)
-          (Distance.levenshtein(ocr, gt).toLong,
-            Distance.levenshtein(cor, gt).toLong,
-            gt.codePointCount(0, gt.length).toLong,
-            dOcr, lOcr.toLong, dCor, lCor.toLong, tp, tn, fp, fn)
-        }
-      }
+    val bc = CorrectionJob.broadcastModel(s, modelFor(s, dir))
+    CorrectionJob.mapCorrected(
+        pairsDf(s, dir).select($"ocr", $"gt").as[(String, String)], bc) {
+      case ((ocr, gt), correct) =>
+        val cor = correct(ocr)
+        val (dOcr, lOcr) = Distance.adjustedDistance(ocr, gt)
+        val (dCor, lCor) = Distance.adjustedDistance(cor, gt)
+        val (tp, tn, fp, fn) = Distance.precisionRecall(ocr, cor, gt)
+        (Distance.levenshtein(ocr, gt).toLong,
+          Distance.levenshtein(cor, gt).toLong,
+          gt.codePointCount(0, gt.length).toLong,
+          dOcr, lOcr.toLong, dCor, lCor.toLong, tp, tn, fp, fn)
+    }
       .toDF("lev_ocr", "lev_cor", "len_gt", "adj_ocr", "alen_ocr",
         "adj_cor", "alen_cor", "tp", "tn", "fp", "fn")
       .agg(sum($"lev_ocr").as("lev_ocr"), sum($"lev_cor").as("lev_cor"),
@@ -559,19 +555,18 @@ object Queries {
   /** B11/B13 flagship: train on the perturbed table, correct it back. */
   def qCorrectDocs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val model = modelFor(s, dir)
-    val bc = s.sparkContext.broadcast(model)
-    pairsDf(s, dir).as[(Long, String, String)]
-      .mapPartitions { it =>
-        val m = bc.value
-        val cache = graft.correct.SharedWindowCache.forModel(m)
-        it.map { case (id, ocr, gt) =>
-          val cor = Corrector.correctLine(ocr, m, cache)
-          (id, ocr, cor, gt, cor == gt)
-        }
-      }
-      .toDF("doc_id", "ocr", "corrected", "gt", "exact_match")
-      .orderBy($"doc_id")
+    val bc = CorrectionJob.broadcastModel(s, modelFor(s, dir))
+    val corrected = CorrectionJob.mapCorrected(
+        pairsDf(s, dir).as[(Long, String, String)], bc) {
+      case ((id, ocr, gt), correct) =>
+        val cor = correct(ocr)
+        (id, ocr, cor, gt, cor == gt)
+    }.toDF("doc_id", "ocr", "corrected", "gt", "exact_match")
+    // persisted: the sort's range-sampling pass then fills the cache
+    // instead of running the whole correction a second time (sorting
+    // the input first would put the correction after the sort's
+    // exchange, which adaptive execution coalesces into one task)
+    registerCache(corrected.persist()).orderBy($"doc_id")
   }
 
   // ------------------------------------------------------------ dedup family

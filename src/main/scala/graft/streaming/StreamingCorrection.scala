@@ -1,8 +1,6 @@
 package graft.streaming
 
-import graft.correct.CompiledModel
-import graft.pipeline.{CorrectionJob, Doc}
-import org.apache.spark.broadcast.Broadcast
+import graft.pipeline.Doc
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -16,8 +14,8 @@ final case class BucketState(residents: Seq[BucketResident])
 /** Structured Streaming surface. The reference is a batch CLI (SURVEY.md
   * §2 "Streaming: none"), but the engine exposes the correction as a
   * streaming transform for continuous ingestion at scale: the correction
-  * is a stateless per-row map, so the same broadcast-model mapPartitions
-  * runs under `readStream` unchanged; checkpointing and exactly-once
+  * is a stateless per-row map, so `CorrectionJob.correctDocs` (unsalted)
+  * runs on a `readStream` Dataset unchanged; checkpointing and exactly-once
   * come from the sink/commit-log, complementing TableIO's batch resume. */
 object StreamingCorrection {
 
@@ -34,7 +32,7 @@ object StreamingCorrection {
     * Doc rows — the streaming face of
     * [[graft.sources.WarcIO.docsFromWarc]]. Exactly-once shard
     * processing comes from the file-source checkpoint; the transform is
-    * stateless, so it composes with correctStream / dedupStream
+    * stateless, so it composes with CorrectionJob.correctDocs / dedupStream
     * downstream. At 100 TB/day this is the front door: the crawler
     * drops shards into the directory and the pipeline keeps up
     * incrementally instead of re-scanning the corpus. */
@@ -59,12 +57,6 @@ object StreamingCorrection {
           }
       }
   }
-
-  /** The flagship correction as a streaming transform (stateless; model
-    * broadcast once, shared memo per executor). */
-  def correctStream(docs: Dataset[Doc],
-      bc: Broadcast[CompiledModel]): Dataset[Doc] =
-    CorrectionJob.correctDocs(docs, bc) // no repartition: stateless map
 
   def toMemorySink(ds: Dataset[Doc], queryName: String): DataStreamWriter[Doc] =
     ds.writeStream.outputMode("append").format("memory").queryName(queryName)

@@ -87,14 +87,23 @@ class CliSpec extends AnyFunSuite {
     Train.main(Array("-t", trainTsv, "-M", modelFile, "-Q", "4"))
     assert(Files.exists(Paths.get(modelFile)))
 
-    // input TSV: line_id TAB ocr-line
+    // input TSV: line_id TAB ocr-line, ids out of order (the output
+    // TSV is sorted by line id)
     val inTsv = s"$dir/in.tsv"
     Files.writeString(Paths.get(inTsv),
-      "l1\tih niht weiß\nl2\tnicht zu bringen")
+      "l2\tnicht zu bringen\nl1\tih niht weiß")
     val outTsv = s"$dir/out.tsv"
-    Process.main(Array("-M", modelFile, "-i", inTsv, "-o", outTsv, "-Q", "4"))
-    val out = Files.readString(Paths.get(outTsv)).trim.linesIterator
-      .map(_.split("\t")).map(a => a(0) -> a(1)).toMap
+    val processed = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(processed, true, "UTF-8")) {
+      Process.main(Array("-M", modelFile, "-i", inTsv, "-o", outTsv, "-Q", "4"))
+    }
+    // counts come from the job's metrics: each input line corrected once
+    assert(processed.toString("UTF-8")
+      .contains(s"corrected 2 lines (1 changed) -> $outTsv"), processed)
+    val outRows = Files.readString(Paths.get(outTsv)).trim.linesIterator
+      .map(_.split("\t")).map(a => a(0) -> a(1)).toSeq
+    assert(outRows.map(_._1) == Seq("l1", "l2"), outRows)
+    val out = outRows.toMap
     assert(out("l1") == "ich nicht weiß", out)
     assert(out("l2") == "nicht zu bringen")
 
