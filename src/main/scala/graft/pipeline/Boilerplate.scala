@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * pages; here the unit is the span): a text span whose exact content
   * recurs in >= minDf distinct documents (nav bars, footers, cookie
   * banners — the content a DOM heuristic would cut) is dropped; media
-  * spans pass through untouched; surviving spans keep their original
-  * (kind, text, media_ref, offset), so the span-sequence invariant
-  * holds on the retained subsequence. A doc whose spans are all
+  * spans, and text spans with a null text, pass through untouched;
+  * surviving spans keep their original (kind, text, media_ref,
+  * offset), so the span-sequence invariant holds on the retained
+  * subsequence. A doc whose spans are all
   * boilerplate stays in the output with an empty span array (dropping
   * rows is the caller's policy, not this operator's).
   *
@@ -42,7 +43,7 @@ object Boilerplate {
     import spark.implicits._
     val qualifying = docs
       .select($"doc_id", explode($"spans").as("s"))
-      .where($"s.kind" === "text")
+      .where($"s.kind" === "text" && $"s.text".isNotNull)
       .select(graft.functions.HexPrefix64.hexPrefix64(md5($"s.text")).as("h"),
         $"doc_id")
       .groupBy($"h").agg(count_distinct($"doc_id").as("nd"))
@@ -55,7 +56,8 @@ object Boilerplate {
     val bc = spark.sparkContext.broadcast(dict)
     val out = docs.map { d =>
       Doc(d.doc_id, d.spans.filter { sp =>
-        sp.kind != "text" || !bc.value.contains(graft.queries.MinHashDefs.hash60(sp.text))
+        sp.kind != "text" || sp.text == null ||
+          !bc.value.contains(graft.queries.MinHashDefs.hash60(sp.text))
       })
     }
     StripResult(out, dict.size, truncated)

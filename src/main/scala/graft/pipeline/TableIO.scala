@@ -258,13 +258,15 @@ object TableIO {
     committed
   }
 
-  /** All committed manifests, parsed (Jackson rides in with Spark). */
+  /** Manifest (de)serializer — Jackson rides in with Spark. */
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** All committed manifests, parsed. */
   def readManifests(path: String,
       conf: Configuration = null): Seq[BucketManifest] = {
     val (fs, root) = fsFor(Option(conf).getOrElse(defaultConf()), path)
     val dir = manifestDir(root)
     if (!fs.exists(dir)) return Seq.empty
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     fs.listStatus(dir).iterator
       .filter { st =>
         val n = st.getPath.getName
@@ -323,10 +325,13 @@ object TableIO {
   }
 
   private def manifestJson(m: BucketManifest): String = {
-    val files = m.files.map(f => "\"" + f.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
-    s"""{"bucket":${m.bucket},"numDocs":${m.numDocs},"numSpans":${m.numSpans},""" +
-      s""""minDocId":"${m.minDocId}","maxDocId":"${m.maxDocId}",""" +
-      s""""checksum":${m.checksum},"attemptId":"${m.attemptId}","files":$files}"""
+    val node = mapper.createObjectNode()
+      .put("bucket", m.bucket).put("numDocs", m.numDocs)
+      .put("numSpans", m.numSpans).put("minDocId", m.minDocId)
+      .put("maxDocId", m.maxDocId).put("checksum", m.checksum)
+      .put("attemptId", m.attemptId)
+    val files = node.putArray("files")
+    m.files.foreach(f => files.add(f))
+    mapper.writeValueAsString(node)
   }
 }

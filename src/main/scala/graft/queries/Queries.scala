@@ -40,23 +40,17 @@ object Queries {
     * qStErrorModel's un-ordered `limit` training samples) read the raw
     * scan via fan = false. */
   private val FanOutBytesPerCore = 4L * 1024 * 1024 // files.openCostInBytes
-  private val inputBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  // looked up per call (one metadata call per query build, next to the
+  // read's own file listing): a cached size would go stale when the
+  // path is rewritten, and a failed lookup must not pin "never fan"
   private def inputBytes(s: SparkSession, path: String): Long =
-    inputBytesCache.computeIfAbsent(path, p => {
-      try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(hp).getLength
-      } catch { case _: Exception => Long.MaxValue } // unknown: never fan
-    })
+    try {
+      val hp = new org.apache.hadoop.fs.Path(path)
+      hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(hp).getLength
+    } catch { case _: Exception => Long.MaxValue } // unknown: never fan
   private[queries] def fanOutSmall(df: DataFrame, path: String): DataFrame = {
     val s = df.sparkSession
-    // session-settable kill switch (spark.graft.fanout.enabled=false):
-    // cluster operators whose inputs are always well-split can opt out
-    // without a rebuild; default on — the size predicate below already
-    // self-disables on real-scale inputs
-    if (s.conf.get("spark.graft.fanout.enabled", "true") == "false") return df
     val cores = s.sparkContext.defaultParallelism
     if (inputBytes(s, path) < cores.toLong * FanOutBytesPerCore)
       df.repartition(cores * 2) // 2 waves: straggler smoothing
@@ -738,7 +732,7 @@ object Queries {
   }
 
   /** Per-doc (band, sig) rows — the shared core of qDedupMinhash
-    * (bucket summary) and qDedupGroups (candidate edges). */
+    * (bucket summary) and `Dedup.duplicateEdges` (candidate edges). */
   private[graft] def minhashBandSigs(mins: DataFrame): DataFrame = {
     import mins.sparkSession.implicits._
     mins.select($"doc_id", expr(MinHashDefs.stackSparkSql))
@@ -846,23 +840,13 @@ object Queries {
     * actually consumes: a per-doc (doc_id, canon, keep) verdict
     * resolving the dedup family's pairwise outputs into groups.
     *
-    * Edges are VERIFIED duplicates only: exact content-hash groups
-    * (star edges to the group min — no per-group array materialization,
-    * so a boilerplate page duplicated a million times costs a window
-    * min, not a giant collect_set) UNION word-trigram Jaccard pairs
-    * >= 0.2. The jaccard pairs already embody LSH-then-verify: bucket
-    * candidates (df-cut <= 20) confirmed by exact similarity — UNION
-    * verified MinHash candidates: b=16 x r=4 band-bucket collisions
-    * (bucket df-cut <= 20, the family standard) confirmed by signature
-    * agreement >= 32/64 permutations (estimated Jaccard >= 0.5). RAW
-    * band collisions are deliberately NOT edges — unverified buckets
-    * chain transitively (the round-4 r=1 signature measured 486/500
-    * docs collapsing into ONE component), which turns the verdict into
-    * noise; a band collision is a candidate to verify, not evidence.
-    * With r=4 the bucket stage is selective enough to admit candidates
-    * and the agreement check is the cheap verification (64 long
-    * comparisons per pair against the cached row-min table — no
-    * re-shingling).
+    * Edges are VERIFIED duplicates only: the exact-duplicate star
+    * edges and agreement-verified MinHash candidates of
+    * [[graft.pipeline.Dedup.duplicateEdges]] (the same edge builder
+    * behind `Dedup.dropNearDuplicates`; see its Scaladoc for the
+    * hot-group and hot-bucket bounds) UNION word-trigram Jaccard pairs
+    * >= 0.2, which already embody LSH-then-verify: bucket candidates
+    * (df-cut <= 20) confirmed by exact similarity.
     *
     * Components resolve by iterative min-label propagation (per round:
     * one shuffle join + one hash agg + ONE collected scalar for the
@@ -874,52 +858,13 @@ object Queries {
     * tables). */
   def qDedupGroups(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // exact-dup star edges via the map-side-combinable groupBy + join-back
-    // qDedupExact already uses — NOT min().over(Window.partitionBy(md5)):
-    // a window co-locates and sorts EVERY row of a content-hash group in
-    // one task, so a virally duplicated document at 100x scale becomes a
-    // single task's sort buffer; the groupBy's per-group state is one
-    // BIGINT min and the n >= 2 cut keeps singleton groups (the vast
-    // majority of the corpus) out of the join entirely.
-    val hashed = docsDfRaw(s, dir).select($"doc_id", md5($"text").as("h"))
-    val exKeepers = hashed.groupBy($"h")
-      .agg(min($"doc_id").as("m"), count(lit(1)).as("n"))
-      .where($"n" >= 2)
-      .select($"h", $"m")
-    val exEdges = hashed.join(exKeepers, "h")
-      .where($"doc_id" =!= $"m")
-      .select($"m".as("a"), $"doc_id".as("b"))
     val jacEdges = ngramJaccardScored(s, dir)
       .select($"ida".as("a"), $"idb".as("b"))
-    // verified minhash candidates (see Scaladoc): bucket df-cut BEFORE
-    // any doc-list materialization (the hot-bucket bound), then
-    // signature-agreement verification against the cached row-min table
-    val mins = minhashMins(s, dir, cache = true)
-    val sigs = registerCache(minhashBandSigs(mins)
-      .repartition($"band", $"sig")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val mhKeep = sigs
-      .groupBy($"band", $"sig").agg(count(lit(1)).as("n"))
-      .where($"n".between(2, 20))
-      .select($"band", $"sig")
-    val mhCands = sigs
-      .join(mhKeep, Seq("band", "sig")) // same partitioning: no exchange
-      .groupBy($"band", $"sig")
-      .agg(collect_set($"doc_id").as("docs")) // bounded <= 20
-      .select(explode(expr(
-        """flatten(transform(array_sort(docs), (a, i) ->
-             transform(slice(array_sort(docs), i + 2, size(docs)), b ->
-               struct(a AS ida, b AS idb))))""")).as("p"))
-      .select($"p.ida".as("ida"), $"p.idb".as("idb"))
-      .distinct()
-    val mhEdges = mhCands
-      .join(mins.as("ma"), $"ida" === $"ma.doc_id")
-      .join(mins.as("mb"), $"idb" === $"mb.doc_id")
-      .where(expr(MinHashDefs.agreementSql("ma", "mb"))
-        >= MinHashDefs.VerifyAgreement)
-      .select($"ida".as("a"), $"idb".as("b"))
     val edges = registerCache(
-      exEdges.union(jacEdges).union(mhEdges).distinct()
+      graft.pipeline.Dedup.duplicateEdges(
+        docsDfRaw(s, dir).select($"doc_id", $"text"),
+        minhashMins(s, dir, cache = true))
+        .union(jacEdges).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val ids = docsDfRaw(s, dir).select($"doc_id".as("id"))
     val (lab, _) = connectedComponents(ids, edges)
@@ -1161,19 +1106,6 @@ object Queries {
       .orderBy($"doc_id")
   }
 
-  /** CCNet-style span-level boilerplate strip — the oracled flat-span
-    * form of `graft.pipeline.Boilerplate.strip` (the typed op over
-    * `Dataset[Doc]` is the scale path: bounded broadcast dictionary,
-    * no data-path shuffle; see Boilerplate.scala). Here the interleaved
-    * span table is CONSTRUCTED deterministically from `documents` with
-    * expressions both engines evaluate identically — 3-token text spans
-    * at even ords, an image span after text span k wherever
-    * (doc_id + k) % 5 == 0 — then any text span whose content appears
-    * in >= 2 distinct docs is stripped; media spans pass through and
-    * retained spans keep their ords (span-sequence equality on the
-    * retained subsequence). The df join keys are the raw span strings
-    * (short by construction); the typed op hashes to 60-bit keys
-    * before its single shuffle. */
   /** Deterministic interleaved-span construction shared by the
     * extraction queries: 3-token text spans indexed k (ord = 2k). */
   private def spanBase(s: SparkSession, dir: String): DataFrame = {
@@ -1186,26 +1118,36 @@ object Queries {
       .select($"doc_id", $"w", explode(sequence(lit(0), $"nspan" - 1)).as("k"))
   }
 
+  /** CCNet-style span-level boilerplate strip, run through the
+    * production operator `graft.pipeline.Boilerplate.strip` (bounded
+    * broadcast dictionary, no data-path shuffle). The interleaved
+    * `Dataset[Doc]` is CONSTRUCTED deterministically from `documents`
+    * by [[markupItems]] — 3-token text spans at even offsets, an image
+    * span after text span k wherever (doc_id + k) % 5 == 0 — then any
+    * text span whose content appears in >= 2 distinct docs is
+    * stripped; media spans pass through and retained spans keep their
+    * offsets (span-sequence equality on the retained subsequence). The
+    * result is flattened back to one row per retained span; a retained
+    * text span occurs in exactly one doc (n_docs = 1), media in none. */
   def qBoilerplate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = spanBase(s, dir)
-    val tspans = base.select($"doc_id",
-      ($"k" * 2).cast("int").as("ord"), lit("text").as("kind"),
-      concat_ws(" ", slice($"w", $"k" * 3 + 1, lit(3))).as("text"),
-      lit("").as("media_ref"))
-    val mspans = base.where((($"doc_id" + $"k") % 5) === 0)
-      .select($"doc_id",
-        ($"k" * 2 + 1).cast("int").as("ord"), lit("image").as("kind"),
-        lit("").as("text"),
-        concat(lit("media://"), $"doc_id".cast("string"), lit("/"),
-          $"k".cast("string")).as("media_ref"))
-    val dfreq = tspans.groupBy($"text")
-      .agg(count_distinct($"doc_id").as("nd"))
-    tspans.unionByName(mspans)
-      .join(dfreq, Seq("text"), "left")
-      .where($"kind" =!= "text" || $"nd" < 2)
-      .select($"doc_id", $"ord", $"kind", $"text", $"media_ref",
-        coalesce($"nd", lit(0L)).as("n_docs"))
+    import graft.pipeline.{Boilerplate, Doc, Span}
+    val docs = docsDfRaw(s, dir).select($"doc_id", $"text").as[(Long, String)]
+      .map { case (id, text) =>
+        var ord = -2
+        Doc(id.toString, markupItems(id, text).map {
+          case Left(chunk) => ord += 2; Span("text", chunk, "", ord)
+          case Right(ref) => Span("image", "", ref, ord + 1)
+        })
+      }
+    val res = Boilerplate.strip(docs, minDf = 2)
+    // a truncated dictionary would keep boilerplate the oracle strips
+    require(!res.truncated, "q_boilerplate: boilerplate dictionary truncated")
+    res.docs.select($"doc_id".cast("bigint").as("doc_id"),
+        explode($"spans").as("sp"))
+      .select($"doc_id", $"sp.offset".as("ord"), $"sp.kind".as("kind"),
+        $"sp.text".as("text"), $"sp.media_ref".as("media_ref"),
+        when($"sp.kind" === "text", 1L).otherwise(0L).as("n_docs"))
       .orderBy($"doc_id", $"ord")
   }
 
@@ -1215,7 +1157,8 @@ object Queries {
   /** Chunking shared by the raw-markup extraction queries: the same
     * 3-token text chunks + media-after-chunk-k rule as [[spanBase]],
     * materialized per doc in document order (Left = text, Right =
-    * media ref) so a markup writer can lay them out. */
+    * media ref) so a markup writer or [[qBoilerplate]] can lay them
+    * out. */
   private def markupItems(id: Long, text: String): Seq[Either[String, String]] = {
     val w = text.split(" ").filter(_.nonEmpty)
     val nspan = (w.length + 2) / 3

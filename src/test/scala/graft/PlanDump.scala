@@ -45,7 +45,7 @@ object PlanDump extends App {
     graft.pipeline.Boilerplate.strip(DocGen.docs(spark, 100, 42L, 8)).docs.toDF(),
     "The typed boilerplate strip's DATA path: scan -> MapElements (filter against the broadcast dictionary) -> sink. NO exchange anywhere — the operator composes with any upstream partitioning. The dictionary pass (not shown: explode -> 60-bit hash agg -> bounded top-df collect) is the only shuffle and runs once before this plan.")
   dump("q_boilerplate", graft.queries.Queries.qBoilerplate(spark, sf),
-    "CCNet-style span-level boilerplate strip (oracled flat form): ONE documents FileScan feeds both the span construction and the df aggregate; the strip is a join against the df agg keyed on span text. The typed scale path (pipeline.Boilerplate.strip) replaces that join with a bounded broadcast dictionary + map-side filter — NO data-path shuffle; this oracled form keeps both engines on identical relational semantics.")
+    "CCNet-style span-level boilerplate strip through the production operator: a typed map builds each doc's interleaved spans from the documents scan, pipeline.Boilerplate.strip filters them against its bounded broadcast dictionary (the dictionary pass ran once before this plan), and the survivors explode back to one row per span. The only Exchange is the presentation sort.")
   dump("q_main_content", graft.queries.Queries.qMainContent(spark, sf),
     "Readability-style main-content block selection: cross-doc df signal -> gaps-and-islands -> largest island per doc. BOTH window functions are doc-partitioned (never global) — per-group state is bounded by the longest document; the only wide exchanges are the df aggregate and the doc-key window shuffles.")
   dump("q_html_extract", graft.queries.Queries.qHtmlExtract(spark, sf),
@@ -75,7 +75,7 @@ object PlanDump extends App {
   dump("q_dedup_embed", graft.queries.Queries.qDedupEmbed(spark, sf),
     "Embedding-cosine near-dup: codegen'd 32-bit LSH signatures -> four 8-bit bands repartitioned ONCE by (band, bval) and persisted -> bucket COUNT + 2..20 cut (observed via embed_dfcut) BEFORE the self-join, so the quadratic pair stage only ever sees bounded buckets -> exact cosine only on colliding pairs -> duplicate band collisions collapsed by a NARROW max(cos) HashAggregate over (ida, idb) AFTER scoring (no first(embedding) SortAggregate) -> TakeOrderedAndProject top-20.")
   dump("q_dedup_groups", graft.queries.Queries.qDedupGroups(spark, sf),
-    "Dedup verdict: connected components over verified edges (exact-hash window-min star edges + jaccard pairs + minhash candidates that pass 32/64 signature agreement against the cached row-min table) via pointer-doubled min-label propagation — the plan below is the CONVERGED round's label table joined back to ids; each round was one shuffle join + hash agg + a self-compose + a single collected scalar. RAW band collisions are still not edges (the r=1 signature measured 97% false chaining); with b=16 x r=4 the bucket stage is selective and the agreement check verifies each candidate.")
+    "Dedup verdict: connected components over verified edges (pipeline.Dedup.duplicateEdges: groupBy-min exact-hash star edges + minhash candidates that pass 32/64 signature agreement against the cached row-min table, UNION jaccard pairs) via pointer-doubled min-label propagation — the plan below is the CONVERGED round's label table joined back to ids; each round was one shuffle join + hash agg + a self-compose + a single collected scalar. RAW band collisions are still not edges (the r=1 signature measured 97% false chaining); with b=16 x r=4 the bucket stage is selective and the agreement check verifies each candidate.")
   dump("q_dedup_simhash", graft.queries.Queries.qDedupSimhash(spark, sf),
     "SimHash near-dup pairs: codegen'd signature scan -> stack into 4x16-bit bands -> ONE (band, bval) repartition, persisted -> bucket COUNT + 2..20 cut (observed via simhash_dfcut) BEFORE the join-back and the now-bounded collect_set -> pair explosion -> exact hamming (bit_count of xor) only on collided candidates. Same count-first banded-LSH plan shape as q_dedup_embed, over bits instead of vectors.")
   dump("q_ann_ivf", graft.queries.Queries.qAnnIvf(spark, sf),

@@ -29,12 +29,15 @@ class BoilerplateSpec extends AnyFunSuite {
       Span("text", nav, "", 0),
       Span("image", "", "media://1/1", 1),
       Span("text", "unique body one", "", 2),
-      Span("text", footer, "", 3))),
+      Span("text", footer, "", 3),
+      Span("text", null, "", 4))),
     Doc("d2", Seq(
       Span("text", nav, "", 0),
       Span("text", footer, "", 1))),
+    // null-text spans in two docs: kept out of the dictionary, passed through
     Doc("d3", Seq(
-      Span("text", "all alone here", "", 0))))
+      Span("text", "all alone here", "", 0),
+      Span("text", null, "", 1))))
 
   test("repeated spans stripped, media and unique spans kept in order") {
     import spark.implicits._
@@ -46,10 +49,13 @@ class BoilerplateSpec extends AnyFunSuite {
       Span("image", "", "media://0/2", 2)))
     assert(out("d1") == Seq(
       Span("image", "", "media://1/1", 1),
-      Span("text", "unique body one", "", 2)))
+      Span("text", "unique body one", "", 2),
+      Span("text", null, "", 4)))
     // a doc that was ALL boilerplate survives with an empty span array
     assert(out("d2").isEmpty)
-    assert(out("d3") == Seq(Span("text", "all alone here", "", 0)))
+    assert(out("d3") == Seq(
+      Span("text", "all alone here", "", 0),
+      Span("text", null, "", 1)))
   }
 
   test("maxDict bounds the dictionary deterministically and reports truncation") {
@@ -68,6 +74,7 @@ class BoilerplateSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val texts = fixture.flatMap(_.spans).filter(_.kind == "text").map(_.text)
+      .filter(_ != null)
     val sql = texts.toDF("t")
       .select(graft.functions.HexPrefix64.hexPrefix64(md5($"t")))
       .as[Long].collect().toSeq

@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -45,6 +48,41 @@ class DedupSpec extends AnyFunSuite {
     val docs = Seq(doc("a", longA), doc("b", longB), doc("c", "tiny")).toDS()
     val out = Dedup.dropNearDuplicates(docs).collect().map(_.doc_id).toSet
     assert(out == Set("a", "b", "c"))
+  }
+
+  test("hot duplicated text: exact edges without a window; survivors equal the battery keep-set") {
+    import spark.implicits._
+    // the corpus of QueriesSpec "dedup groups: hot duplicated text…"
+    // (one text in docs 0..39, two unique docs; keep-set {0, 40, 41})
+    val hot = "identical viral boilerplate page shared by almost every document in this corpus"
+    val docs = ((0 until 40).map(i => doc(f"h$i%02d", hot)) ++ Seq(
+      doc("h40", "first unique document with its own words entirely"),
+      doc("h41", "second unique document also unlike anything else here"))).toDS()
+    // optimized plans of every query the call executes (the cached
+    // edge relation prints its own plan inside the first one reading it)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan.treeString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def seen(marker: String) = plans.asScala.exists(_.contains(marker))
+    spark.listenerManager.register(listener)
+    val got = try {
+      val ids = Dedup.dropNearDuplicates(docs).collect().map(_.doc_id).toSet
+      // listener events arrive asynchronously but in order: once this
+      // marker query is seen, every earlier execution has been seen
+      spark.range(1).toDF("dedup_plan_marker").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen("dedup_plan_marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      ids
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen("dedup_plan_marker"), "query listener events never arrived")
+    assert(seen("InMemoryRelation"), "no captured plan read the edge relation")
+    assert(got == Set("h00", "h40", "h41"))
+    val windowed = plans.asScala.filter(_.contains("Window ["))
+    assert(windowed.isEmpty, s"hot-key window in the dedup plan:\n${windowed.mkString("\n")}")
   }
 
   test("agrees with the battery's group resolution on the documents fixture") {

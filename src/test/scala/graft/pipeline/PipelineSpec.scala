@@ -201,6 +201,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(TableIO.vacuum(p).isEmpty, "fully committed table has no orphans")
   }
 
+  test("manifests round-trip doc ids that need JSON escaping") {
+    import spark.implicits._
+    val p = s"${Files.createTempDirectory("graft-io-escape")}/t"
+    val docs = Seq(Doc("a\"b\\c", Seq(Span("text", "x", "", 0))))
+    TableIO.writeDocs(docs.toDS(), p, buckets = 1)
+    assert(TableIO.readManifests(p).map(_.minDocId) == Seq("a\"b\\c"))
+    assert(TableIO.readDocs(spark, p).collect().toSeq == docs)
+  }
+
   test("extraction pipeline e2e: boilerplate strip -> correct -> commit -> read back") {
     import spark.implicits._
     // inject the same footer span into every doc — the cross-doc repeated

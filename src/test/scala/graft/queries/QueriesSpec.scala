@@ -327,6 +327,18 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("scan fan-out: a failed size lookup is not remembered") {
+    import spark.implicits._
+    val path = s"${java.nio.file.Files.createTempDirectory("graft-fanout")}/t.parquet"
+    val df = spark.range(10).toDF("id")
+    // not there yet: the size is unknown, so the plan is left alone
+    assert(Queries.fanOutSmall(df, path) eq df)
+    Seq(1L, 2L).toDF("id").write.parquet(path)
+    val fanned = Queries.fanOutSmall(df, path).queryExecution.logical
+    assert(fanned.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Repartition],
+      s"small input must fan out:\n$fanned")
+  }
+
   test("minhash b x r banding admits a near-dup pair, rejects a far pair; agreement verifies") {
     import spark.implicits._
     val base = "the grand duchy archive preserves thousands of handwritten letters from the eighteenth century describing trade routes harvests and township disputes in careful regular script"
